@@ -722,7 +722,8 @@ def _run_maintenance(args) -> int:
     production lake."""
     from pathlib import Path
 
-    from door2door_etl_spark.io.versioned import VersionedParquetTable
+    from door2door_etl_spark.io.manifest import ManifestTable
+    from door2door_etl_spark.io.versioned import open_table
 
     warehouse = Path(args.lake_root) / "warehouse"
     if args.table:
@@ -736,27 +737,18 @@ def _run_maintenance(args) -> int:
         print(f"error: no warehouse tables under {warehouse}", file=sys.stderr)
         return 1
 
-    def is_manifest(root: Path) -> bool:
-        return (root / "_manifests").is_dir()
+    # Steps that exist for one layout only check the table's class.
+    tables = {root: open_table(str(root)) for root in roots}
+    manifests = [r for r, t in tables.items() if isinstance(t, ManifestTable)]
 
     report: dict[str, dict] = {}
     if args.step == "history":
         # Pure metadata in both layouts: no Spark session.
-        from door2door_etl_spark.io.manifest import ManifestTable
-
-        for root in roots:
-            if is_manifest(root):
-                table = ManifestTable(str(root))
-                report[root.name] = {
-                    "history": table.describe_history(),
-                    "schema_evolution": table.schema_evolution(),
-                }
-            else:
-                hist = VersionedParquetTable(str(root)).describe_history()
-                report[root.name] = {"history": hist}
+        for root, table in tables.items():
+            report[root.name] = {"history": table.describe_history()}
+            if root in manifests:
+                report[root.name]["schema_evolution"] = table.schema_evolution()
     elif args.step == "fsck":
-        from door2door_etl_spark.io.manifest import ManifestTable
-
         spark = built = None
         if args.deep:
             from pyspark.sql import SparkSession
@@ -767,11 +759,9 @@ def _run_maintenance(args) -> int:
             if spark is None:
                 spark = built = build_session(app_name="door2door-fsck")
         try:
-            for root in roots:
-                if is_manifest(root):
-                    report[root.name] = ManifestTable(str(root)).fsck(
-                        spark, deep=args.deep
-                    )
+            for root, table in tables.items():
+                if root in manifests:
+                    report[root.name] = table.fsck(spark, deep=args.deep)
                 else:
                     report[root.name] = {"skipped": "not a manifest table"}
         finally:
@@ -796,27 +786,19 @@ def _run_maintenance(args) -> int:
         from door2door_etl_spark.io.versioned import restore_versioned
 
         root = roots[0]
-        if is_manifest(root):
+        if root in manifests:
             new_v = restore_manifest(str(root), args.to_version)
         else:
             new_v = restore_versioned(str(root), args.to_version)
         report[root.name] = {"restored_to": args.to_version, "new_version": new_v}
     elif args.step == "vacuum":
-        from door2door_etl_spark.io.manifest import ManifestTable
-
-        for root in roots:  # metadata-only: no Spark session needed
-            if is_manifest(root):
-                # Explicit maintenance is where the O(table) file GC runs
-                # (per-commit auto-vacuum only trims manifests).
-                removed = ManifestTable(str(root)).vacuum(
-                    keep=args.keep_versions,
-                    min_age_hours=args.min_age_hours,
-                    gc_files=True,
-                )
-            else:
-                removed = VersionedParquetTable(str(root)).vacuum(
-                    keep=args.keep_versions, min_age_hours=args.min_age_hours
-                )
+        # Metadata-only: no Spark session needed.  On a manifest table
+        # this is where the O(table) file GC runs (its default; per-commit
+        # auto-vacuum only trims manifests).
+        for root, table in tables.items():
+            removed = table.vacuum(
+                keep=args.keep_versions, min_age_hours=args.min_age_hours
+            )
             report[root.name] = {"removed_snapshots": removed}
     elif args.step == "autocompact":
         # Policy first, session only if some table needs the rewrite —
@@ -826,11 +808,7 @@ def _run_maintenance(args) -> int:
             compaction_advice,
         )
 
-        advices = {
-            root: compaction_advice(str(root))
-            for root in roots
-            if is_manifest(root)
-        }
+        advices = {root: compaction_advice(str(root)) for root in manifests}
         to_compact = [r for r, a in advices.items() if a["recommend"]]
         if to_compact:
             from pyspark.sql import SparkSession
@@ -865,11 +843,11 @@ def _run_maintenance(args) -> int:
         try:
             for root in roots:
                 if args.step == "purge":
-                    if not is_manifest(root):
+                    if root not in manifests:
                         continue  # POSIX tables delete copy-on-write; no DVs
                     n = purge_deletes_manifest(spark, str(root))
                     report[root.name] = {"files_rewritten": n}
-                elif is_manifest(root):
+                elif root in manifests:
                     n = compact_manifest(
                         spark, str(root), target_file_mb=args.target_file_mb
                     )

@@ -68,6 +68,7 @@ from pyspark.sql.types import StructType
 
 from door2door_etl_spark.io.manifest import (
     LocalFsOps,
+    _fs_for,
     _is_object_uri,
 )
 
@@ -94,14 +95,6 @@ class DeltaProtocolError(ValueError):
     """A structurally broken or unreadable Delta log (not a feature gap):
     missing metaData, gaps in the commit sequence, cleaned log below the
     requested version, no log at all."""
-
-
-def _fs_for(path: str):
-    if _is_object_uri(path):
-        from door2door_etl_spark.io.manifest import S3FsOps
-
-        return S3FsOps()
-    return LocalFsOps()
 
 
 @dataclass

@@ -71,7 +71,7 @@ from pyspark.sql.types import (
 )
 
 from door2door_etl_spark.io.avro_codec import avro_read
-from door2door_etl_spark.io.manifest import LocalFsOps, _is_object_uri
+from door2door_etl_spark.io.manifest import _fs_for, _is_object_uri
 
 _META_RE = re.compile(r"^v(\d+)\.metadata\.json$")
 _STATUS_DELETED = 2
@@ -83,14 +83,6 @@ class IcebergUnsupportedError(NotImplementedError):
 
 class IcebergProtocolError(ValueError):
     """A structurally broken or unreadable Iceberg table."""
-
-
-def _fs_for(path: str):
-    if _is_object_uri(path):
-        from door2door_etl_spark.io.manifest import S3FsOps
-
-        return S3FsOps()
-    return LocalFsOps()
 
 
 # --------------------------------------------------------------------------

@@ -72,14 +72,14 @@ import re
 import shutil
 import time
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from pathlib import Path
 from typing import Protocol, runtime_checkable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from .versioned import ConcurrentWriteError, changes_between
+from .versioned import ConcurrentWriteError
 
 _MANIFEST_RE = re.compile(r"^data-v(\d{8})\.json$")
 
@@ -313,6 +313,12 @@ def _file_stats(path: str, stats_cols=None) -> dict:
 
 def _is_object_uri(path: str) -> bool:
     return "://" in path
+
+
+def _fs_for(path: str) -> FsOps:
+    """The storage backend a path lives on: S3 for object-store URIs,
+    the local filesystem otherwise."""
+    return S3FsOps() if _is_object_uri(path) else LocalFsOps()
 
 
 def _staged_files(fs, staging: str) -> list[tuple[str, str]]:
@@ -554,7 +560,7 @@ class ManifestTable:
     the object-store half of the versioned protocol (see module doc)."""
 
     root: str
-    fs: FsOps = field(default_factory=LocalFsOps)
+    fs: FsOps | None = None  # default: the backend the root's scheme names
 
     def __post_init__(self):
         # One normalization point for object-store tables: s3:// becomes
@@ -564,6 +570,8 @@ class ManifestTable:
         from .objectstore import normalize_object_uri
 
         object.__setattr__(self, "root", normalize_object_uri(self.root))
+        if self.fs is None:
+            object.__setattr__(self, "fs", _fs_for(self.root))
 
     @property
     def manifests_dir(self) -> str:
@@ -573,8 +581,8 @@ class ManifestTable:
     def files_dir(self) -> str:
         return os.path.join(self.root, "_files")
 
-    def current_version(self) -> int | None:
-        versions = [
+    def _retained_versions(self) -> list[int]:
+        return [
             v
             for v in (
                 _parse_manifest_version(n)
@@ -582,6 +590,14 @@ class ManifestTable:
             )
             if v is not None
         ]
+
+    def first_retained_version(self) -> int | None:
+        """The oldest manifest vacuum has left: the lowest time-travel
+        target and a fresh change-feed consumer's starting point."""
+        return min(self._retained_versions(), default=None)
+
+    def current_version(self) -> int | None:
+        versions = self._retained_versions()
         if versions:
             return max(versions)
         cached = self.fs.read_bytes(os.path.join(self.root, "_current"))
@@ -1278,7 +1294,7 @@ def merge_manifest(
     """
     from pyspark.sql import functions as F
 
-    table = ManifestTable(root, fs=fs) if fs is not None else ManifestTable(root)
+    table = ManifestTable(root, fs=fs)
     if os.path.islink(root) or os.path.isdir(
         os.path.join(os.path.dirname(root.rstrip("/")) or ".",
                      f".{os.path.basename(root.rstrip('/'))}__versions")
@@ -1505,7 +1521,7 @@ def append_manifest(
 
     Returns the committed version number.
     """
-    table = ManifestTable(root, fs=fs) if fs is not None else ManifestTable(root)
+    table = ManifestTable(root, fs=fs)
     if os.path.islink(root) or os.path.isdir(
         os.path.join(os.path.dirname(root.rstrip("/")) or ".",
                      f".{os.path.basename(root.rstrip('/'))}__versions")
@@ -1695,7 +1711,7 @@ def _file_level_delete_manifest(
 
     from pyspark.sql import functions as F
 
-    table = ManifestTable(root, fs=fs) if fs is not None else ManifestTable(root)
+    table = ManifestTable(root, fs=fs)
     for _attempt in range(max_retries):
         base = table.current_version()
         if base is None:
@@ -1790,7 +1806,7 @@ def _dv_delete_manifest(
     an O(deleted rows) commit regardless of table size."""
     from pyspark.sql import functions as F
 
-    table = ManifestTable(root, fs=fs) if fs is not None else ManifestTable(root)
+    table = ManifestTable(root, fs=fs)
     for _attempt in range(max_retries):
         base = table.current_version()
         if base is None:
@@ -1873,7 +1889,7 @@ def purge_deletes_manifest(
     of files rewritten."""
     from pyspark.sql import functions as F
 
-    table = ManifestTable(root, fs=fs) if fs is not None else ManifestTable(root)
+    table = ManifestTable(root, fs=fs)
     for _attempt in range(max_retries):
         base = table.current_version()
         if base is None:
@@ -1950,56 +1966,6 @@ def purge_deletes_manifest(
     )
 
 
-def table_changes_manifest(
-    spark: SparkSession,
-    root: str,
-    key: str,
-    from_version: int,
-    to_version: int | None = None,
-    fs: FsOps | None = None,
-) -> DataFrame:
-    """Change feed between two manifest versions — the object-store twin
-    of :func:`door2door_etl_spark.io.versioned.table_changes`, sharing its
-    diff core (slim key+hash shuffle, union-of-schemas null-for-missing
-    convention)."""
-    table = ManifestTable(root, fs=fs) if fs is not None else ManifestTable(root)
-    if to_version is None:
-        to_version = table.current_version()
-        if to_version is None:
-            raise ValueError(f"{root} has no committed manifest")
-    old = table.read(spark, from_version)
-    new = table.read(spark, to_version)
-    return changes_between(old, new, key)
-
-
-def apply_changes_manifest(
-    spark: SparkSession,
-    root: str,
-    changes: DataFrame,
-    key: str,
-    partition_col: str | None = None,
-    fs: FsOps | None = None,
-) -> dict:
-    """Apply a change feed to a manifest-mode replica (deletes first,
-    then one MERGE; idempotent on replay).  Twin of
-    :func:`door2door_etl_spark.io.versioned.apply_changes`."""
-    from pyspark.sql import functions as F
-
-    dels = changes.filter(F.col("_change_type") == "delete").select(key)
-    ups = changes.filter(F.col("_change_type") != "delete").drop("_change_type")
-    n_del = (
-        delete_manifest(spark, root, dels, key, fs=fs)
-        if dels.limit(1).count()
-        else 0
-    )
-    n_up = (
-        merge_manifest(spark, root, ups, key, partition_col=partition_col, fs=fs)
-        if ups.limit(1).count()
-        else 0
-    )
-    return {"deleted": n_del, "upserted": n_up}
-
-
 def compact_manifest(
     spark: SparkSession,
     root: str,
@@ -2058,7 +2024,7 @@ def compact_manifest(
     """
     if sort_by and zorder_by:
         raise ValueError("compact_manifest: sort_by and zorder_by are exclusive")
-    table = ManifestTable(root, fs=fs) if fs is not None else ManifestTable(root)
+    table = ManifestTable(root, fs=fs)
     for _attempt in range(max_retries):
         base = table.current_version()
         if base is None:
@@ -2347,7 +2313,7 @@ def restore_manifest(
     re-lists the restored snapshot's files (and carries its stats), no
     data moves at any table size.  History is never rewritten; the bad
     versions stay inspectable until vacuum.  Returns the new version."""
-    table = ManifestTable(root, fs=fs) if fs is not None else ManifestTable(root)
+    table = ManifestTable(root, fs=fs)
     for _attempt in range(max_retries):
         base = table.current_version()
         if base is None:
@@ -2392,7 +2358,7 @@ def compaction_advice(
 
     Returns ``{version, n_files, total_mb, avg_mb, recommend, reason}``.
     """
-    table = ManifestTable(root, fs=fs) if fs is not None else ManifestTable(root)
+    table = ManifestTable(root, fs=fs)
     version = table.current_version()
     if version is None:
         return {"version": None, "n_files": 0, "total_mb": 0.0,

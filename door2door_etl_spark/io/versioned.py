@@ -56,7 +56,14 @@ mode — per-version file manifests whose put-if-absent create is the claim,
 file re-listing instead of hardlinks, no symlinks anywhere — lives in
 :mod:`door2door_etl_spark.io.manifest` with the same merge semantics and a
 pluggable :class:`~door2door_etl_spark.io.manifest.FsOps` backend (local
-now; S3 conditional-PUT later).
+or S3 conditional PUT).
+
+:func:`open_table` is the ONE place that decides which layout a root
+holds; both table classes answer the same read-side calls
+(``current_version``, ``first_retained_version``, ``read``,
+``describe_history``, ``vacuum``), so the change feed
+(:func:`table_changes`, :func:`apply_changes`, :class:`ChangeFeedCursor`)
+and every downstream consumer work on either layout without probing it.
 """
 
 from __future__ import annotations
@@ -67,8 +74,12 @@ import shutil
 import uuid
 from dataclasses import dataclass
 from pathlib import Path
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
+
+if TYPE_CHECKING:
+    from .manifest import FsOps, ManifestTable
 
 _VERSION_RE = re.compile(r"^data-v(\d{8})$")
 
@@ -199,19 +210,23 @@ def _hardlink_tree(src: Path, dst: Path) -> None:
             os.link(Path(dirpath) / fn, out / fn)
 
 
+def _claimed_versions(vdir: Path) -> list[int]:
+    """Every CLAIMED snapshot version on disk (unordered)."""
+    if not vdir.is_dir():
+        return []
+    return [
+        v
+        for v in (_parse_version(e.name) for e in vdir.iterdir() if e.is_dir())
+        if v is not None
+    ]
+
+
 def _max_claimed_version(vdir: Path) -> int | None:
     """Highest CLAIMED snapshot version on disk.  A claim (the atomic
     rename of a fully-written staging dir to ``data-v{N}``) IS the commit
     point — the pointer file and root symlink are publication caches that
     may lag behind after a crash and are rolled forward on next access."""
-    if not vdir.is_dir():
-        return None
-    versions = [
-        v
-        for v in (_parse_version(e.name) for e in vdir.iterdir() if e.is_dir())
-        if v is not None
-    ]
-    return max(versions, default=None)
+    return max(_claimed_versions(vdir), default=None)
 
 
 def resolve_table_path(root: str) -> str:
@@ -297,10 +312,18 @@ class VersionedParquetTable:
             return None
         return _parse_version(pointer)
 
+    def first_retained_version(self) -> int | None:
+        """The oldest snapshot vacuum has left: the lowest time-travel
+        target and a fresh change-feed consumer's starting point."""
+        return min(_claimed_versions(self.versions_dir), default=None)
+
     def data_path(self) -> str:
         return resolve_table_path(self.root)
 
-    def read(self, spark: SparkSession) -> DataFrame:
+    def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
+        """The committed snapshot, or retained ``version`` (time travel)."""
+        if version is not None:
+            return read_version(spark, self.root, version)
         return spark.read.parquet(self.data_path())
 
     def is_versioned(self) -> bool:
@@ -516,6 +539,29 @@ class VersionedParquetTable:
         return removed
 
 
+def _is_manifest_root(root: str) -> bool:
+    """The layout predicate behind :func:`open_table`: object-store URIs
+    and roots holding a ``_manifests/`` commit log are manifest tables."""
+    from .manifest import _is_object_uri
+
+    root = os.fspath(root)
+    return _is_object_uri(root) or os.path.isdir(os.path.join(root, "_manifests"))
+
+
+def open_table(
+    root: str, fs: FsOps | None = None
+) -> VersionedParquetTable | ManifestTable:
+    """The table at ``root`` in whichever layout it is stored — the only
+    code that decides the layout.  A manifest table uses ``fs`` (default:
+    picked from the root's scheme); a POSIX-versioned root takes none."""
+    root = os.fspath(root)
+    if _is_manifest_root(root):
+        from .manifest import ManifestTable
+
+        return ManifestTable(root, fs=fs)
+    return VersionedParquetTable(root)
+
+
 def _check_constraints(
     source: DataFrame, constraints: list[str] | None, root: str
 ) -> None:
@@ -600,8 +646,7 @@ def merge_versioned(
         )
     _check_constraints(source, constraints, root)
     table = VersionedParquetTable(root)
-    root_p = Path(root)
-    if (root_p / "_manifests").is_dir():
+    if _is_manifest_root(root):
         raise ValueError(
             f"{root} is an object-store MANIFEST table "
             "(io/manifest.py layout); merge it with merge_manifest — "
@@ -875,10 +920,12 @@ def table_changes(
     key: str,
     from_version: int,
     to_version: int | None = None,
+    fs: FsOps | None = None,
 ) -> DataFrame:
-    """Change feed between two committed versions (CDC): one row per key
-    whose content changed, with ``_change_type`` ∈ {insert, update, delete}
-    and the NEW side's columns (null except ``key`` for deletes).
+    """Change feed between two committed versions (CDC) of a table in
+    either layout (``fs`` reaches a manifest table's storage): one row per
+    key whose content changed, with ``_change_type`` ∈ {insert, update,
+    delete} and the NEW side's columns (null except ``key`` for deletes).
 
     Physical shape: both snapshots project to (key, row-hash) map-side, so
     the full-outer join shuffles two slim columns — never the payload; the
@@ -888,22 +935,17 @@ def table_changes(
     schema evolution, and external writers are all diffable — a compacted
     version correctly reports zero changes.)
     """
-    from pyspark.sql import functions as F
-
-    old = read_version(spark, root, from_version)
-    table = VersionedParquetTable(root)
+    table = open_table(root, fs)
+    old = table.read(spark, from_version)
     if to_version is None:
-        cur = table.current_version()
-        if cur is None:
+        to_version = table.current_version()
+        if to_version is None:
             raise ValueError(f"{root} has no committed versions")
-        to_version = cur
-    new = read_version(spark, root, to_version)
-    return changes_between(old, new, key)
+    return changes_between(old, table.read(spark, to_version), key)
 
 
 def changes_between(old: DataFrame, new: DataFrame, key: str) -> DataFrame:
-    """The CDC diff core (see :func:`table_changes`), layout-agnostic —
-    shared by the POSIX-versioned and object-store-manifest modes."""
+    """The CDC diff core (see :func:`table_changes`), layout-agnostic."""
     from pyspark.sql import functions as F
 
     # Diff over the UNION of both schemas with a null-for-missing
@@ -1118,20 +1160,28 @@ def apply_changes(
     changes: DataFrame,
     key: str,
     partition_col: str | None = None,
+    fs: FsOps | None = None,
 ) -> dict:
-    """Apply a :func:`table_changes` feed to a replica table — the CDC
-    consumer half: deletes first (so a delete+reinsert of the same key in
-    one feed nets to the reinsert), then inserts/updates as one MERGE.
+    """Apply a :func:`table_changes` feed to a replica table in either
+    layout (a root holding no table yet is created POSIX-versioned) — the
+    CDC consumer half: deletes first (so a delete+reinsert of the same key
+    in one feed nets to the reinsert), then inserts/updates as one MERGE.
     Replaying the same feed is a no-op (both halves are idempotent), so
     at-least-once delivery of change batches is safe.  Returns
     ``{"deleted": n, "upserted": n}``."""
     from pyspark.sql import functions as F
 
+    if isinstance(open_table(root, fs), VersionedParquetTable):
+        delete, merge, kw = delete_versioned, merge_versioned, {}
+    else:
+        from .manifest import delete_manifest, merge_manifest
+
+        delete, merge, kw = delete_manifest, merge_manifest, {"fs": fs}
     dels = changes.filter(F.col("_change_type") == "delete").select(key)
     ups = changes.filter(F.col("_change_type") != "delete").drop("_change_type")
-    n_del = delete_versioned(spark, root, dels, key) if dels.limit(1).count() else 0
+    n_del = delete(spark, root, dels, key, **kw) if dels.limit(1).count() else 0
     n_up = (
-        merge_versioned(spark, root, ups, key, partition_col=partition_col)
+        merge(spark, root, ups, key, partition_col=partition_col, **kw)
         if ups.limit(1).count()
         else 0
     )
@@ -1146,13 +1196,13 @@ class ChangeFeedCursor:
 
     Protocol: ``poll()`` returns every change between the last COMMITTED
     cursor position and the table's current version; the consumer applies
-    them (``apply_changes`` / ``apply_changes_manifest`` are idempotent),
-    then calls ``commit(to_version)`` — write-temp + fsync + rename, so a
-    crash between apply and commit re-delivers the same window on the
-    next poll (at-least-once + idempotent apply = effectively-once).
+    them (``apply_changes`` is idempotent), then calls
+    ``commit(to_version)`` — write-temp + fsync + rename, so a crash
+    between apply and commit re-delivers the same window on the next poll
+    (at-least-once + idempotent apply = effectively-once).
 
     Works over both table layouts (POSIX-versioned and object-store
-    manifest — detected by the ``_manifests`` dir).  Retention contract:
+    manifest, as decided by :func:`open_table`).  Retention contract:
     the source's vacuum ``keep``/``min_age_hours`` must exceed the
     consumer's maximum lag, or ``poll`` raises the retained-versions
     error from time travel — loudly, never a silent gap.
@@ -1174,62 +1224,18 @@ class ChangeFeedCursor:
         table's FIRST retained version (initial sync = apply the feed
         from v_first to current after seeding the replica with v_first —
         or simply full-copy and ``commit(current)``)."""
-        is_manifest = (Path(self.root) / "_manifests").is_dir()
-        if is_manifest:
-            from door2door_etl_spark.io.manifest import (
-                ManifestTable,
-                table_changes_manifest,
-            )
-
-            cur = ManifestTable(self.root).current_version()
-        else:
-            cur = VersionedParquetTable(self.root).current_version()
-        if cur is None:
-            return None, self.last_committed()
+        table = open_table(self.root)
+        cur = table.current_version()
         last = self.last_committed()
-        if last is not None and cur <= last:
+        if cur is None or (last is not None and cur <= last):
             return None, last
-        from_v = last if last is not None else self._first_retained(is_manifest)
+        from_v = last if last is not None else table.first_retained_version()
         if from_v is None or from_v >= cur:
             return None, last
-        if is_manifest:
-            feed = table_changes_manifest(
-                spark, self.root, key=key, from_version=from_v, to_version=cur
-            )
-        else:
-            feed = table_changes(
-                spark, self.root, key=key, from_version=from_v, to_version=cur
-            )
+        feed = changes_between(
+            table.read(spark, from_v), table.read(spark, cur), key
+        )
         return feed, cur
-
-    def _first_retained(self, is_manifest: bool) -> int | None:
-        if is_manifest:
-            from door2door_etl_spark.io.manifest import (
-                ManifestTable,
-                _parse_manifest_version,
-            )
-
-            t = ManifestTable(self.root)
-            versions = [
-                v
-                for v in (
-                    _parse_manifest_version(n)
-                    for n in t.fs.list_names(t.manifests_dir)
-                )
-                if v is not None
-            ]
-        else:
-            vdir = _versions_dir(self.root)
-            versions = [
-                v
-                for v in (
-                    _parse_version(e.name)
-                    for e in vdir.iterdir()
-                    if e.is_dir()
-                )
-                if v is not None
-            ] if vdir.is_dir() else []
-        return min(versions, default=None)
 
     def commit(self, version: int) -> None:
         """Durably advance the cursor — only after the window's changes

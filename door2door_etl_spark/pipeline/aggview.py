@@ -40,9 +40,9 @@ from pyspark.sql import functions as F
 from door2door_etl_spark.io.versioned import (
     ChangeFeedCursor,
     VersionedParquetTable,
+    changes_between,
     merge_versioned,
-    read_version,
-    table_changes,
+    open_table,
 )
 
 _SEP = "\x1f"
@@ -222,39 +222,6 @@ class IncrementalAggView:
         sum_cols plus avg_cols' numerators (deduped, order-stable)."""
         return list(dict.fromkeys([*self.sum_cols, *self.avg_cols]))
 
-    # -- source-layout dispatch -------------------------------------------
-    def _is_manifest(self) -> bool:
-        return (Path(self.source_root) / "_manifests").is_dir()
-
-    def _current_source_version(self) -> int | None:
-        if self._is_manifest():
-            from door2door_etl_spark.io.manifest import ManifestTable
-
-            return ManifestTable(self.source_root).current_version()
-        return VersionedParquetTable(self.source_root).current_version()
-
-    def _read_source_version(self, spark: SparkSession, version: int) -> DataFrame:
-        if self._is_manifest():
-            from door2door_etl_spark.io.manifest import ManifestTable
-
-            return ManifestTable(self.source_root).read(spark, version)
-        return read_version(spark, self.source_root, version)
-
-    def _changes(
-        self, spark: SparkSession, from_v: int, to_v: int
-    ) -> DataFrame:
-        if self._is_manifest():
-            from door2door_etl_spark.io.manifest import table_changes_manifest
-
-            return table_changes_manifest(
-                spark, self.source_root, key=self.key, from_version=from_v,
-                to_version=to_v,
-            )
-        return table_changes(
-            spark, self.source_root, key=self.key, from_version=from_v,
-            to_version=to_v,
-        )
-
     # -- frames -----------------------------------------------------------
     def _agg(self, base: DataFrame) -> DataFrame:
         """The view definition applied to any frame (weights all +1)."""
@@ -365,13 +332,7 @@ class IncrementalAggView:
     def full_recompute_frame(self, spark: SparkSession) -> DataFrame:
         """The parity oracle: the same aggregate computed from scratch on
         the source's CURRENT snapshot."""
-        if self._is_manifest():
-            from door2door_etl_spark.io.manifest import ManifestTable
-
-            base = ManifestTable(self.source_root).read(spark)
-        else:
-            base = VersionedParquetTable(self.source_root).read(spark)
-        return self._agg(base)
+        return self._agg(open_table(self.source_root).read(spark))
 
     def read(self, spark: SparkSession) -> DataFrame:
         """Current view: group rows only (ledger rows and zero-count
@@ -721,7 +682,8 @@ class IncrementalAggView:
         atomically with the group updates; the cursor commits last).
         Returns ``{"action", "from_version", "to_version", "groups_touched"}``.
         """
-        cur = self._current_source_version()
+        source = open_table(self.source_root)
+        cur = source.current_version()
         if cur is None:
             raise ValueError(f"{self.source_root} has no committed versions")
         cursor = self._cursor()
@@ -731,7 +693,7 @@ class IncrementalAggView:
             # Initial sync: materialize the aggregate of the CURRENT
             # snapshot, then start the feed from there.
             seed = self._view_schema_frame(
-                spark, self._agg(self._read_source_version(spark, cur))
+                spark, self._agg(source.read(spark, cur))
             )
             ledger = self._ledger_row(spark, 0, cur)
             n = merge_versioned(
@@ -778,9 +740,9 @@ class IncrementalAggView:
                 "to_version": to_v, "groups_touched": 0,
             }
 
-        feed = self._changes(spark, from_v, to_v)
+        old = source.read(spark, from_v)
+        feed = changes_between(old, source.read(spark, to_v), self.key)
         changed_keys = feed.select(F.col(self.key).alias("_ck")).distinct()
-        old = self._read_source_version(spark, from_v)
         pre = old.join(
             changed_keys, old[self.key].eqNullSafe(F.col("_ck")), "leftsemi"
         ).withColumn("_w", F.lit(-1))
@@ -974,7 +936,7 @@ class IncrementalAggView:
             flagged = joined.filter(needs_any & (new_n > 0)).select(
                 "_group_key", F.lit(True).alias("_recomputed")
             )
-            snap = self._read_source_version(spark, to_v)
+            snap = source.read(spark, to_v)
             rec = (
                 snap.withColumn("_group_key", _group_key_expr(self.group_cols))
                 .join(F.broadcast(flagged.select("_group_key")), "_group_key", "leftsemi")
@@ -1040,7 +1002,7 @@ class IncrementalAggView:
                 "_group_key", F.lit(True).alias("_dv_rec")
             )
             snap_dv = (
-                self._read_source_version(spark, to_v)
+                source.read(spark, to_v)
                 .withColumn("_group_key", _group_key_expr(self.group_cols))
                 .join(
                     F.broadcast(dv_flagged.select("_group_key")),

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from door2door_etl_spark.io.readers import widen_if_narrow
 from door2door_etl_spark.operators.dedup import (
     connected_dedup_clusters,
     exact_dedup_groups,
@@ -72,16 +73,8 @@ def curate_corpus(
     """
     stages: list[tuple[str, int, int]] = []
     # Width-normalize ONCE at funnel entry: every downstream stage (and
-    # its persist) inherits this partitioning, so a narrow input — one
-    # parquet file = one partition at test scale — would otherwise run
-    # the WHOLE funnel single-core (measured: 12 of the funnel's 13 s
-    # at sf0.1 were the near-dup stage's sha256 minhash work on one
-    # partition).  At production scale the input already arrives wider
-    # than the cluster's parallelism and this is a skipped no-op guard,
-    # not a shuffle.
-    par = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par:
-        docs = docs.repartition(par)
+    # its persist) inherits this partitioning.
+    docs = widen_if_narrow(docs)
     # The raw input is consumed exactly once — by the fused map-side block
     # below — and ``normalize`` is a 1:1 map, so the funnel's input count
     # IS the block's ``_n_norm`` aggregate: no separate persist+count pass

@@ -58,9 +58,9 @@ from pyspark.sql import functions as F
 from door2door_etl_spark.io.versioned import (
     ChangeFeedCursor,
     VersionedParquetTable,
+    changes_between,
     merge_versioned,
-    read_version,
-    table_changes,
+    open_table,
 )
 
 _LEDGER_PREFIX = "\x00ledger"
@@ -93,45 +93,6 @@ class IncrementalJoinView:
         overlap = set(self.left_cols) & set(self.right_cols)
         if overlap:
             raise ValueError(f"ambiguous view columns: {sorted(overlap)}")
-
-    # -- source layout dispatch (POSIX-versioned vs object-store manifest,
-    # the aggview discipline: each source resolves independently) --------
-
-    @staticmethod
-    def _is_manifest(root: str) -> bool:
-        return (Path(root) / "_manifests").is_dir()
-
-    @classmethod
-    def _source_version(cls, root: str) -> int | None:
-        if cls._is_manifest(root):
-            from door2door_etl_spark.io.manifest import ManifestTable
-
-            return ManifestTable(root).current_version()
-        return VersionedParquetTable(root).current_version()
-
-    @classmethod
-    def _read_source(
-        cls, spark: SparkSession, root: str, version: int
-    ) -> DataFrame:
-        if cls._is_manifest(root):
-            from door2door_etl_spark.io.manifest import ManifestTable
-
-            return ManifestTable(root).read(spark, version)
-        return read_version(spark, root, version)
-
-    @classmethod
-    def _source_changes(
-        cls, spark: SparkSession, root: str, key: str, from_v: int, to_v: int
-    ) -> DataFrame:
-        if cls._is_manifest(root):
-            from door2door_etl_spark.io.manifest import table_changes_manifest
-
-            return table_changes_manifest(
-                spark, root, key=key, from_version=from_v, to_version=to_v
-            )
-        return table_changes(
-            spark, root, key=key, from_version=from_v, to_version=to_v
-        )
 
     # -- cursors / ledger ------------------------------------------------
 
@@ -234,11 +195,9 @@ class IncrementalJoinView:
     def full_recompute_frame(self, spark: SparkSession) -> DataFrame:
         """The view's defining join over the CURRENT snapshots (parity
         check / disaster rebuild)."""
-        lv = self._source_version(self.left_root)
-        rv = self._source_version(self.right_root)
         return self._joined(
-            self._read_source(spark, self.left_root, lv),
-            self._read_source(spark, self.right_root, rv),
+            open_table(self.left_root).read(spark),
+            open_table(self.right_root).read(spark),
         ).drop("_live")
 
     # -- maintenance -------------------------------------------------------
@@ -249,8 +208,8 @@ class IncrementalJoinView:
         Returns ``{"action", "left_window", "right_window",
         "rows_touched"}``.
         """
-        lv = self._source_version(self.left_root)
-        rv = self._source_version(self.right_root)
+        left, right = open_table(self.left_root), open_table(self.right_root)
+        lv, rv = left.current_version(), right.current_version()
         if lv is None or rv is None:
             raise ValueError("both sources need a committed version")
         lcur, rcur = self._cursors()
@@ -272,10 +231,7 @@ class IncrementalJoinView:
                 rcur.commit(frv)
                 ll, rl = flv, frv
         if ll is None or rl is None:
-            seed = self._joined(
-                self._read_source(spark, self.left_root, lv),
-                self._read_source(spark, self.right_root, rv),
-            )
+            seed = self._joined(left.read(spark, lv), right.read(spark, rv))
             ledger = self._ledger_row(spark, seed, 0, lv, 0, rv)
             n = merge_versioned(
                 spark, self.view_root, seed.unionByName(ledger), key="_vk"
@@ -319,20 +275,20 @@ class IncrementalJoinView:
                 "rows_touched": 0,
             }
 
-        left_new = self._read_source(spark, self.left_root, lv)
-        right_new = self._read_source(spark, self.right_root, rv)
+        left_new = left.read(spark, lv)
+        right_new = right.read(spark, rv)
 
         # Affected left keys: changed left rows, plus left rows whose fk
         # points at a changed right key (insert, update, or delete — a
         # late-arriving dimension row back-fills here).
         affected = None
         if lv > ll:
-            affected = self._source_changes(
-                spark, self.left_root, self.left_key, ll, lv
+            affected = changes_between(
+                left.read(spark, ll), left_new, self.left_key
             ).select(F.col(self.left_key).cast("string").alias("_vk"))
         if rv > rl:
-            dr_keys = self._source_changes(
-                spark, self.right_root, self.right_key, rl, rv
+            dr_keys = changes_between(
+                right.read(spark, rl), right_new, self.right_key
             ).select(
                 F.col(self.right_key).cast("string").alias("_fk")
             ).distinct()

@@ -251,6 +251,7 @@ def test_streaming_cdc_replication_races_writer_and_replays(
     import glob
 
     from door2door_etl_spark.io import manifest as M
+    from door2door_etl_spark.io import versioned as V
     from door2door_etl_spark.streaming import stream_replicate_manifest_table
 
     src_root = str(tmp_path / "src")
@@ -291,7 +292,7 @@ def test_streaming_cdc_replication_races_writer_and_replays(
 
     # (2) is armed BEFORE the first run: the first diff call lands a
     # concurrent commit on the source, mid-batch.
-    real_diff = M.table_changes_manifest
+    real_diff = V.table_changes
     state = {"raced": False}
 
     def racing_diff(spark_, root_, key, from_version, to_version, fs=None):
@@ -304,7 +305,7 @@ def test_streaming_cdc_replication_races_writer_and_replays(
         return real_diff(spark_, root_, key, from_version=from_version,
                          to_version=to_version, fs=fs)
 
-    monkeypatch.setattr(M, "table_changes_manifest", racing_diff)
+    monkeypatch.setattr(V, "table_changes", racing_diff)
 
     # First run: v1 seeds (v0->v1 insert diff), v2 diffs — during which
     # the racer lands v3.  The batch's window is already pinned, so the

@@ -20,12 +20,14 @@ from pyspark.sql import functions as F
 from door2door_etl_spark.io.manifest import (
     LocalFsOps,
     ManifestTable,
-    apply_changes_manifest,
     delete_manifest,
     merge_manifest,
-    table_changes_manifest,
 )
-from door2door_etl_spark.io.versioned import ConcurrentWriteError
+from door2door_etl_spark.io.versioned import (
+    ConcurrentWriteError,
+    apply_changes,
+    table_changes,
+)
 
 
 def _mk(spark, rows, schema="k int, v string, part string"):
@@ -288,14 +290,14 @@ def test_cdc_feed_and_replica_apply(spark, tmp_path):
         spark, src, spark.createDataFrame([(3,)], "k int"), key="k",
         vacuum_keep=99,
     )
-    feed = table_changes_manifest(spark, src, key="k", from_version=1)
+    feed = table_changes(spark, src, key="k", from_version=1)
     kinds = {r["k"]: r["_change_type"] for r in feed.collect()}
     assert kinds == {2: "update", 4: "insert", 3: "delete"}
-    stats = apply_changes_manifest(spark, rep, feed, key="k")
+    stats = apply_changes(spark, rep, feed, key="k")
     assert stats == {"deleted": 1, "upserted": 2}
     assert _as_dict(spark, rep) == _as_dict(spark, src)
     # Idempotent replay.
-    apply_changes_manifest(spark, rep, feed, key="k")
+    apply_changes(spark, rep, feed, key="k")
     assert _as_dict(spark, rep) == _as_dict(spark, src)
 
 
@@ -396,7 +398,7 @@ def test_compact_manifest_rewrites_filesets(spark, tmp_path):
     assert len(after) == n_files < len(before)
     assert _as_dict(spark, root) == {i: (f"v{i}", "p1") for i in range(4)}
     # A compacted version diffs as zero changes.
-    assert table_changes_manifest(spark, root, "k", 4, 5).count() == 0
+    assert table_changes(spark, root, "k", 4, 5).count() == 0
 
 
 def test_cli_maintenance_detects_manifest_tables(spark, tmp_path, capsys):
@@ -627,6 +629,49 @@ def test_manifest_table_metadata_protocol_on_s3(tmp_path):
         "s3://lake/warehouse/tbl/_files/part-3.parquet",
         "s3://lake/warehouse/tbl/_files/part-4.parquet",
     ]
+
+
+def test_object_store_root_is_one_layout_to_every_reader(
+    spark, tmp_path, monkeypatch
+):
+    """An ``s3://`` manifest table reads as a manifest table through the
+    S3 backend everywhere: ``open_table``, the change-feed cursor and the
+    epoch reader all see its committed versions.  The fake client stands
+    in for the one ``boto3.client`` would build; the commits are
+    metadata-only (empty file lists), so no reader needs the s3a data
+    plane."""
+    import boto3
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from door2door_etl_spark.io.manifest import S3FsOps
+    from door2door_etl_spark.io.txn import LakeEpoch
+    from door2door_etl_spark.io.versioned import ChangeFeedCursor, open_table
+
+    client = _FakeS3Client()
+    monkeypatch.setattr(boto3, "client", lambda *a, **kw: client)
+    root = "s3://lake/warehouse/tbl"
+    v1 = StructType([StructField("k", LongType())])
+    v2 = StructType(v1.fields + [StructField("v", StringType())])
+    writer = ManifestTable(root, fs=S3FsOps(client=client))
+    for version, schema in ((1, v1), (2, v2)):
+        assert writer._claim(version, [], schema, [])
+        writer.publish(version)
+
+    table = open_table(root)
+    assert isinstance(table, ManifestTable) and isinstance(table.fs, S3FsOps)
+    assert (table.first_retained_version(), table.current_version()) == (1, 2)
+    assert table.read(spark, 1).schema == v1
+
+    feed, to_v = ChangeFeedCursor(root, str(tmp_path / "cursor")).poll(
+        spark, key="k"
+    )
+    assert to_v == 2
+    assert feed.columns == ["_change_type", "k", "v"] and feed.count() == 0
+
+    epoch = LakeEpoch(str(tmp_path / "epoch"))
+    assert epoch.read_table(spark, root).schema == v2
+    epoch.publish({root: 1})
+    assert epoch.read_table(spark, root).schema == v1
 
 
 def test_s3fsops_object_to_object_move_is_server_side(tmp_path):
@@ -889,7 +934,7 @@ def test_dv_delete_cdc_and_vacuum_gc(spark, tmp_path):
     merge_manifest(spark, root, _mk(spark, rows), key="k")
     delete_where_manifest(spark, root, "k >= 6", mode="dv")
     # CDC between v1 and v2 reports the masked rows as deletes
-    ch = table_changes_manifest(spark, root, "k", from_version=1)
+    ch = table_changes(spark, root, "k", from_version=1)
     assert {
         r["k"] for r in ch.filter("_change_type = 'delete'").collect()
     } == {6, 7}

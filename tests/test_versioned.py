@@ -982,3 +982,50 @@ def test_zorder_equal_depth_balances_skewed_buckets(spark):
     zmax = z.agg(F.max("_zorder")).first()[0]
     assert 0 <= zmax < 2 ** (2 * bits)
     assert z.columns == ["x", "y", "_zorder"]
+
+
+def test_layout_is_decided_only_by_open_table():
+    """Only the two layout modules may name the manifest layout's commit
+    directory; every other module asks ``open_table`` which layout a
+    root holds, so the decision cannot drift between call sites."""
+    import door2door_etl_spark
+
+    pkg = Path(door2door_etl_spark.__file__).parent
+    allowed = {pkg / "io" / "manifest.py", pkg / "io" / "versioned.py"}
+    offenders = sorted(
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if p not in allowed and "_manifests" in p.read_text()
+    )
+    assert offenders == []
+
+
+def test_open_table_picks_the_layout_and_both_answer_the_same_reads(
+    spark, tmp_path
+):
+    """``open_table`` is the one layout decision: a POSIX-versioned root
+    (or a root holding nothing yet) opens as ``VersionedParquetTable``, a
+    ``_manifests/`` root or an object-store URI as ``ManifestTable`` —
+    and both answer the same version and time-travel reads."""
+    from door2door_etl_spark.io.manifest import (
+        LocalFsOps,
+        ManifestTable,
+        merge_manifest,
+    )
+    from door2door_etl_spark.io.versioned import open_table
+
+    assert isinstance(open_table(str(tmp_path / "nothing")), VersionedParquetTable)
+    for mode, merge in (("posix", merge_versioned), ("manifest", merge_manifest)):
+        root = str(tmp_path / mode)
+        merge(spark, root, _mk(spark, [(1, "a", "p1")]), key="k", vacuum_keep=99)
+        merge(spark, root, _mk(spark, [(1, "b", "p1")]), key="k", vacuum_keep=99)
+        table = open_table(root)
+        assert isinstance(
+            table, VersionedParquetTable if mode == "posix" else ManifestTable
+        )
+        assert (table.first_retained_version(), table.current_version()) == (1, 2)
+        assert [r["v"] for r in table.read(spark, 1).collect()] == ["a"]
+        assert [r["v"] for r in table.read(spark).collect()] == ["b"]
+        assert [h["version"] for h in table.describe_history()] == [2, 1]
+    fs = LocalFsOps()
+    assert open_table("s3://bucket/warehouse/t", fs=fs).fs is fs
